@@ -216,80 +216,137 @@ def test_recall_floor_ann_index_ivf(spark, tmp_path):
     assert r >= 0.70, r
 
 
-# -- incremental append: frozen-state appends must equal a fresh
-# build over the union under the same frozen state
+# -- rebuild over a live index: installed by the KG stages' swap
+# (plans/compaction._swap), settled by its shared _repair with the meta
+# sidecar as completeness marker
 
 
-def test_append_lsh_equals_fresh_union(spark, tmp_path):
-    """LSH planes are a pure function of (n_planes, dim), so append
-    (build A, append B) must probe IDENTICALLY to a fresh build over
-    A∪B — ranks and sims byte-equal."""
-    from webstruct_spark.operators.similarity import append_to_ann_index
+def _spy_repair(monkeypatch):
+    """Record every repair state write_ann_index's entry repair
+    returns."""
+    from webstruct_spark.plans import compaction
 
-    emb = _embeddings(spark)
-    qs = _queries(emb)
-    a = emb.where(F.col("vec_id") < 300)
-    b = emb.where(F.col("vec_id") >= 300)
-    p_app = str(tmp_path / "app_idx")
-    p_full = str(tmp_path / "full_idx")
-    write_ann_index(a, p_app, kind="lsh", n_planes=8)
-    meta = append_to_ann_index(b, p_app)
-    assert meta == {"kind": "lsh", "n_planes": 8, "dim": 16}
-    write_ann_index(emb, p_full, kind="lsh", n_planes=8)
-    got = ann_index_topk(spark, p_app, qs, k=5, multiprobe=1)
-    want = ann_index_topk(spark, p_full, qs, k=5, multiprobe=1)
-    assert _as_set(got) == _as_set(want)
+    states = []
+    real = compaction._repair
+
+    def spy(spark, path, marker="_SUCCESS"):
+        states.append(real(spark, path, marker=marker))
+        return states[-1]
+
+    monkeypatch.setattr(compaction, "_repair", spy)
+    return states
 
 
-def test_append_ivf_frozen_centroids_equals_fresh_union(spark, tmp_path):
-    """IVF appends NEVER move centroids (documented drift policy), so
-    append must equal a fresh build over A∪B with A's centroids
-    passed in frozen (``centroids=``) — and the skew monitor (the
-    rebuild trigger) stays computable on the appended index."""
-    from webstruct_spark.operators.similarity import (
-        _read_centroids,
-        ann_index_cell_skew,
-        append_to_ann_index,
-    )
-
-    emb = _embeddings(spark)
-    qs = _queries(emb)
-    a = emb.where(F.col("vec_id") < 300)
-    b = emb.where(F.col("vec_id") >= 300)
-    p_app = str(tmp_path / "vapp_idx")
-    p_full = str(tmp_path / "vfull_idx")
-    write_ann_index(a, p_app, kind="ivf", n_centroids=8)
-    frozen = _read_centroids(spark, p_app)
-    append_to_ann_index(b, p_app)
-    # centroids untouched by the append
-    assert np.array_equal(_read_centroids(spark, p_app), frozen)
-    write_ann_index(emb, p_full, kind="ivf", centroids=frozen)
-    got = ann_index_topk(spark, p_app, qs, k=5, n_probe=3)
-    want = ann_index_topk(spark, p_full, qs, k=5, n_probe=3)
-    assert _as_set(got) == _as_set(want)
-    skew = ann_index_cell_skew(spark, p_app)
-    assert skew >= 1.0
-
-
-def test_append_validates_dim_and_can_skip_existing(spark, tmp_path):
-    from webstruct_spark.operators.similarity import append_to_ann_index
-
-    emb = _embeddings(spark)
-    path = str(tmp_path / "val_idx")
-    write_ann_index(emb, path, kind="lsh", n_planes=6)
-    wrong = spark.createDataFrame(
-        [(9999, [1.0, 2.0])], "vec_id long, embedding array<float>"
-    )
+def test_rebuild_over_live_index_is_swap_protected(spark, tmp_path,
+                                                   monkeypatch):
+    """write_ann_index over a LIVE index must not overwrite in place:
+    a crash before the swap leaves the old index serving identical
+    answers; a crash between the two swap renames is diagnosed loudly
+    by probes and rolled forward by the next write_ann_index."""
     import pytest
 
-    with pytest.raises(ValueError, match="dimension"):
-        append_to_ann_index(wrong, path)
-    # retried append of an already-present batch: skip_existing_ids
-    # anti-joins it away, leaving counts unchanged
-    batch = emb.where(F.col("vec_id") < 50)
-    n0 = spark.read.parquet(path).count()
-    append_to_ann_index(batch, path, skip_existing_ids=True)
-    assert spark.read.parquet(path).count() == n0
+    from webstruct_spark.operators.similarity import read_ann_meta
+    from webstruct_spark.plans import fsio
+
+    emb = _embeddings(spark)
+    base = emb.where(F.col("vec_id") < 200)
+    path = str(tmp_path / "idx")
+    write_ann_index(base, path, kind="lsh", n_planes=6)
+    qs = _queries(emb)
+    before = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
+
+    # window 1: killed at the FIRST swap rename — the fully built tmp
+    # is an orphan, the live index never stopped serving
+    real_rename = fsio.rename
+
+    def crash_at_first_rename(s, a, b):
+        raise RuntimeError("simulated crash at swap start")
+
+    with monkeypatch.context() as m:
+        m.setattr(fsio, "rename", crash_at_first_rename)
+        with pytest.raises(RuntimeError, match="swap start"):
+            write_ann_index(emb, path, kind="lsh", n_planes=6)
+    assert _as_set(
+        ann_index_topk(spark, path, qs, k=5, multiprobe=1)
+    ) == before
+
+    # window 2: killed BETWEEN the two renames — live absent, old +
+    # complete tmp present.  Probes refuse with the rebuild diagnosis
+    # instead of a bare missing-path error...
+    calls = {"n": 0}
+
+    def crash_between_renames(s, a, b):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash between renames")
+        return real_rename(s, a, b)
+
+    with monkeypatch.context() as m:
+        m.setattr(fsio, "rename", crash_between_renames)
+        with pytest.raises(RuntimeError, match="between renames"):
+            write_ann_index(emb, path, kind="lsh", n_planes=6)
+    with pytest.raises(RuntimeError, match="rebuild swap crashed"):
+        read_ann_meta(spark, path)
+    with pytest.raises(RuntimeError, match="rebuild swap crashed"):
+        ann_index_topk(spark, path, qs, k=5, multiprobe=1)
+
+    # ...and the next write_ann_index's entry repair rolls the
+    # complete tmp forward before rebuilding
+    with monkeypatch.context() as m:
+        states = _spy_repair(m)
+        write_ann_index(emb, path, kind="lsh", n_planes=6)
+    assert states == ["rolled_forward"]
+    twin = str(tmp_path / "twin")
+    write_ann_index(emb, twin, kind="lsh", n_planes=6)
+    got = _as_set(ann_index_topk(spark, path, qs, k=5, multiprobe=1))
+    want = _as_set(ann_index_topk(spark, twin, qs, k=5, multiprobe=1))
+    assert got == want
+    assert [d.name for d in tmp_path.iterdir() if "__compact_" in d.name] \
+        == []
+
+
+def test_rebuild_repair_refuses_metaless_live_beside_old(
+    spark, tmp_path, monkeypatch
+):
+    """old + live both present with the LIVE dir metaless is not the
+    post-swap crash shape (the swap only installs complete,
+    meta-bearing builds — meta loss is external damage): finishing
+    the swap would delete the old copy, which may be the only
+    meta-bearing complete index left, and auto-restoring old would
+    silently serve the pre-rebuild index.  Refuse with both copies
+    intact and restoration guidance instead."""
+    import shutil
+
+    import pytest
+
+    emb = _embeddings(spark, n=60, dim=8)
+    path = str(tmp_path / "damaged")
+    root = tmp_path / "damaged"
+    old = tmp_path / "damaged.__compact_old__"
+    write_ann_index(emb, path, kind="lsh", n_planes=4)
+    # fabricate: post-swap crash leftover (old copy), then the live
+    # meta sidecar is lost
+    shutil.copytree(root, old)
+    shutil.rmtree(root / "_ann_meta.parquet")
+
+    with pytest.raises(RuntimeError, match="lost its _ann_meta") as exc:
+        write_ann_index(emb, path, kind="lsh", n_planes=4)
+    # the message guides the meta-bearing restoration
+    assert "still carries its meta" in str(exc.value)
+    # both copies intact, old's meta untouched
+    assert (old / "_ann_meta.parquet").exists()
+    assert root.exists()
+
+    # the TRUE post-swap crash shape (live meta intact) still
+    # finishes the swap
+    p2 = str(tmp_path / "healthy")
+    write_ann_index(emb, p2, kind="lsh", n_planes=4)
+    shutil.copytree(tmp_path / "healthy",
+                    tmp_path / "healthy.__compact_old__")
+    states = _spy_repair(monkeypatch)
+    write_ann_index(emb, p2, kind="lsh", n_planes=4)
+    assert states == ["finished_swap"]
+    assert not (tmp_path / "healthy.__compact_old__").exists()
 
 
 def test_embedding_neardup_recall(spark):

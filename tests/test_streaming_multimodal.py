@@ -1,10 +1,6 @@
 # -*- coding: utf-8 -*-
-"""Streaming parity (availableNow drain == batch) and multimodal
-binary-column plumbing."""
+"""Streaming parity (availableNow drain == batch)."""
 import os
-
-import numpy as np
-import pytest
 
 
 def test_stream_mentions_equals_batch(spark, corpus_dir, tmp_path):
@@ -65,41 +61,3 @@ def test_stream_windowed_counts(spark, corpus_dir, tmp_path):
     assert rows and all(r["n_mentions"] > 0 for r in rows)
     types = {r["entity_type"] for r in rows}
     assert "ORG" in types and "CITY" in types
-
-
-def test_multimodal_features_and_frames(spark):
-    from webstruct_spark.operators.multimodal import (
-        decode_asset,
-        extract_features,
-        sample_frames,
-        synth_assets,
-    )
-
-    assets = synth_assets(spark, 24).cache()
-    feats = {r["asset_id"]: r for r in extract_features(assets).collect()}
-    assert len(feats) == 24
-    for r in feats.values():
-        assert len(r["features"]) == 5
-        assert 0 <= r["features"][0] <= 255
-    # determinism: same asset -> same checksum across runs
-    feats2 = {r["asset_id"]: r for r in extract_features(assets).collect()}
-    assert all(
-        feats[i]["checksum"] == feats2[i]["checksum"] for i in feats
-    )
-    # frame sampling on videos
-    vids = assets.where("kind = 'video'")
-    frames = sample_frames(vids, every_n=2).collect()
-    assert frames
-    one = vids.limit(1).collect()[0]
-    arr = decode_asset(one["media"])
-    mine = [f for f in frames if f["asset_id"] == one["asset_id"]]
-    assert len(mine) == len(range(0, arr.shape[0], 2))
-    np.testing.assert_array_equal(
-        np.frombuffer(mine[0]["frame"], dtype=np.uint8),
-        arr[0].ravel(),
-    )
-    # real codecs are an explicit stub
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        decode_asset(b"\x89PNG....")

@@ -687,3 +687,30 @@ def test_train_crf_compact_equals_fit():
                 feat_hash_dim=fh,
             )
             assert got.export() == want.export(), (fh, epochs)
+
+
+def test_mixing_trainers_refuse_zero_rounds(spark):
+    """rounds < 1 fits nothing, so both mixing trainers refuse it
+    before any Spark job runs instead of handing back the untrained
+    model (the empty corpus used to pass silently this way)."""
+    from webstruct_spark.operators.trained import (
+        train_crf_distributed,
+        train_crf_mixed_local,
+    )
+
+    empty = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, text string"
+    )
+    sc = spark.sparkContext
+    group = "test-zero-rounds"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        for rounds in (0, -1):
+            with pytest.raises(ValueError, match="rounds must be >= 1"):
+                train_crf_distributed(empty, n_parts=4, rounds=rounds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for rounds in (0, -1):
+        with pytest.raises(ValueError, match="rounds must be >= 1"):
+            train_crf_mixed_local([], n_parts=4, rounds=rounds)

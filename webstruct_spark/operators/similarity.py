@@ -1,7 +1,7 @@
 # -*- coding: utf-8 -*-
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
+In-flight top-k over a full scan:
 
 * :func:`brute_force_topk` — exact cosine top-k.  Distributed as
   two-stage top-k: the (small) query matrix is broadcast, each
@@ -14,6 +14,12 @@ Two paths:
   bucket ± multiprobe flips, exact rerank inside candidate buckets.
   Approximate: recall < 1 by design; gauged against brute force in
   tests.
+* :func:`ivf_topk` — deterministic k-means cells, probing each
+  query's ``n_probe`` nearest cells.
+
+Build once, probe many: :func:`write_ann_index` materializes the LSH
+or IVF bucketing as a bucket-partitioned parquet index, and
+:func:`ann_index_topk` reads only the probed buckets.
 
 Similarities are computed in float32 numpy (then rounded) in BOTH the
 distributed and the single-node gold path, so comparisons are exact.
@@ -21,14 +27,10 @@ distributed and the single-node gold path, so comparisons are exact.
 from __future__ import annotations
 
 import hashlib
-import json
-import math
-import time
-from typing import Iterator, List, Set, Tuple
+from typing import Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -255,6 +257,9 @@ def ivf_topk(
 # live on HDFS/S3 where the driver has no POSIX view of the path.
 
 
+_ANN_META = "_ann_meta.parquet"
+
+
 def _sidecar(path: str, name: str) -> str:
     """Join a sidecar name onto the index path — delegates to the one
     URI-safe join rule (fsio.join) so the two can never drift."""
@@ -282,30 +287,29 @@ def _write_ann_meta(spark: SparkSession, path: str, meta: dict) -> None:
             "kind string, n_planes int, n_centroids int, dim int",
         )
         .write.mode("overwrite")
-        .parquet(_sidecar(path, "_ann_meta.parquet"))
+        .parquet(_sidecar(path, _ANN_META))
     )
 
 
 def read_ann_meta(spark: SparkSession, path: str) -> dict:
     """Read the one-row ``_ann_meta.parquet`` sidecar (via Spark, so
     any Hadoop-visible filesystem works).  A missing sidecar with a
-    ``.__ann_rebuild_old__`` sibling present is the one shape a
+    ``<path>.__compact_old__`` sibling present is the one shape a
     READER can see of a rebuild crashed between its two swap renames
-    — diagnosed loudly (run any maintenance entry to settle) instead
-    of surfacing as a bare missing-path error that reads like the
-    index was never built."""
+    — diagnosed loudly (the next :func:`write_ann_index` settles it)
+    instead of surfacing as a bare missing-path error that reads like
+    the index was never built."""
     from ..plans import fsio
+    from ..plans.compaction import SUF_OLD
 
-    meta_path = _sidecar(path, "_ann_meta.parquet")
-    if not fsio.exists(spark, meta_path) and fsio.exists(
-        spark, path + _ANN_REBUILD_OLD
-    ):
+    meta_path = _sidecar(path, _ANN_META)
+    old = path + SUF_OLD
+    if not fsio.exists(spark, meta_path) and fsio.exists(spark, old):
         raise RuntimeError(
             "ann index at %r: rebuild swap crashed between its two "
             "renames (the old index is intact at %r) — run "
-            "write_ann_index / append_to_ann_index / "
-            "compact_ann_index (their entry repair settles it) "
-            "before probing" % (path, path + _ANN_REBUILD_OLD)
+            "write_ann_index (its entry repair settles it) before "
+            "probing" % (path, old)
         )
     r = spark.read.parquet(meta_path).first()
     meta = {"kind": r["kind"], "dim": int(r["dim"])}
@@ -335,8 +339,8 @@ def _bucketized(
     vec_col: str,
 ) -> DataFrame:
     """(vec_id, vec, bucket) rows: each vector tagged with its LSH
-    bucket / IVF cell under the given frozen state — the single
-    bucketing kernel shared by build and append."""
+    bucket / IVF cell under the given state (LSH planes or IVF
+    centroids)."""
     spark = embeddings.sparkSession
     bc = spark.sparkContext.broadcast((kind, state))
 
@@ -376,12 +380,6 @@ def _bucketized(
         ]
     )
     return src.mapInPandas(bucketize, out_schema)
-
-
-# whole-index rebuild swap markers (sibling DIRS of the index path —
-# the per-bucket _ANN_TMP/_ANN_OLD markers live INSIDE it)
-_ANN_REBUILD_TMP = ".__ann_rebuild_tmp__"
-_ANN_REBUILD_OLD = ".__ann_rebuild_old__"
 
 
 def _build_index_at(
@@ -430,9 +428,7 @@ def _build_index_at(
         .write.mode("overwrite")
         # static overwrite pinned: under a cluster-wide
         # partitionOverwriteMode=dynamic, overwrite would keep stale
-        # bucket=N dirs (and crashed-compact leftovers) that are
-        # absent from the new data — the recover path's deletion
-        # guarantee depends on static semantics
+        # bucket=N dirs that are absent from the new data
         .option("partitionOverwriteMode", "static")
         .partitionBy("bucket")
         .parquet(target)
@@ -452,78 +448,6 @@ def _build_index_at(
     _write_ann_meta(spark, target, meta)
 
 
-def _repair_ann_rebuild(spark: SparkSession, path: str) -> str:
-    """Settle a crashed whole-index rebuild swap (see
-    :func:`write_ann_index`'s live-rebuild path).  Windows, in
-    protocol order: rebuild-tmp alone → pre-swap orphan, drop it;
-    old present + live ABSENT → between the two renames — roll
-    FORWARD when the tmp is complete (meta sidecar present — written
-    last), else roll BACK to the old index; old + live both present →
-    post-swap crash, finish the old delete.  Called at every
-    maintenance entry (append / compact / rebuild); read-only probes
-    instead get a loud diagnosis from :func:`read_ann_meta`.  Returns
-    the repair state ("clean" when nothing was pending)."""
-    from ..plans import fsio
-
-    tmp = path + _ANN_REBUILD_TMP
-    old = path + _ANN_REBUILD_OLD
-    if fsio.exists(spark, old):
-        if fsio.exists(spark, path):
-            if not fsio.exists(spark, _sidecar(path, "_ann_meta.parquet")):
-                # NOT the post-swap crash shape: the swap only ever
-                # renames a complete (meta-bearing, meta written
-                # last) tmp to the live name, so a metaless live dir
-                # beside an old copy means the live meta was LOST
-                # after the swap — external damage, not a protocol
-                # window.  Finishing the swap here would delete what
-                # may be the only meta-bearing complete copy, and
-                # auto-restoring the old copy would silently serve
-                # the PRE-rebuild index (the metaless live dir is
-                # the newer build); refuse with both intact, like
-                # every other non-protocol shape
-                old_has_meta = fsio.exists(
-                    spark, _sidecar(old, "_ann_meta.parquet")
-                )
-                raise RuntimeError(
-                    "ann rebuild repair: live index %r lost its "
-                    "_ann_meta.parquet sidecar while a %s copy "
-                    "exists — not a crash shape the swap protocol "
-                    "can produce (the swap only installs complete, "
-                    "meta-bearing builds), so refusing to delete "
-                    "either copy.  %s  Or retrain from the external "
-                    "source: write_ann_index(..., recover=True) "
-                    "after removing the old copy by hand"
-                    % (
-                        path, _ANN_REBUILD_OLD,
-                        (
-                            "The old copy still carries its meta: "
-                            "restore the PRE-rebuild index by "
-                            "deleting the metaless live dir and "
-                            "renaming the old copy to the live name "
-                            "(accepting that the crashed rebuild's "
-                            "newer input is discarded)."
-                            if old_has_meta else
-                            "The old copy lacks its meta too — "
-                            "neither is complete; salvage by hand."
-                        ),
-                    )
-                )
-            fsio.delete(spark, tmp)
-            fsio.delete(spark, old)
-            return "finished_swap"
-        if fsio.exists(spark, _sidecar(tmp, "_ann_meta.parquet")):
-            fsio.rename(spark, tmp, path)
-            fsio.delete(spark, old)
-            return "rolled_forward"
-        fsio.delete(spark, tmp)
-        fsio.rename(spark, old, path)
-        return "rolled_back"
-    if fsio.exists(spark, tmp):
-        fsio.delete(spark, tmp)
-        return "dropped_tmp"
-    return "clean"
-
-
 def write_ann_index(
     embeddings: DataFrame,
     path: str,
@@ -532,9 +456,6 @@ def write_ann_index(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-    recover: bool = False,
-    _prerepaired: bool = False,
 ) -> dict:
     """Materialize a bucket-partitioned ANN index at ``path``.
 
@@ -542,113 +463,60 @@ def write_ann_index(
     from n_planes+dim, no stored state).  ``kind='ivf'``: k-means
     cells; centroids are stored beside the data as
     ``_ann_centroids.parquet`` (underscore-prefixed → invisible to
-    parquet discovery); pass ``centroids=`` to build with a FROZEN
-    pre-trained quantizer instead of training one (the rebuild path
-    of the append policy — see :func:`append_to_ann_index`).  Returns
-    the metadata dict (also written as a one-row
-    ``_ann_meta.parquet`` sidecar through Spark, so the index works
-    on any Hadoop-visible filesystem — the driver never needs a POSIX
-    view of ``path``).
+    parquet discovery).  Returns the metadata dict (also written as a
+    one-row ``_ann_meta.parquet`` sidecar through Spark, so the index
+    works on any Hadoop-visible filesystem — the driver never needs a
+    POSIX view of ``path``).
 
-    Rebuilding OVER a live index (the append policy's skew-triggered
-    retrain) does NOT overwrite in place — ``mode('overwrite')``
-    deletes the live index at write start, so a crash anywhere in a
-    100 TB-scale rebuild would leave probes with nothing to serve and
-    nothing to roll back to, for as long as the redo takes.  Instead
-    the new index is built at a ``.__ann_rebuild_tmp__`` sibling
-    (meta sidecar written last = completeness marker) and swapped in
-    with the same two-rename protocol as compaction; the old index
-    keeps serving probes for the whole build, and every crash window
-    is settled by :func:`_repair_ann_rebuild` at the next
-    maintenance entry (probes mid-swap get a loud diagnosis from
-    :func:`read_ann_meta` instead of a bare missing-path error).
-
-    ``recover=True`` asserts that ``embeddings`` is an external
-    source (reads nothing from the live index) and lets the rebuild
-    proceed over a crashed-compact shape the entry repair refuses to
-    untangle — the swap replaces the whole index root, refused dirs
-    included, so a full retrain from source is the wholesale recovery
-    from those shapes.  Never pass it with index-derived input: its
-    file listing is missing the refused bucket's rows (parquet
-    discovery skips the ``_``-prefixed dirs holding their only copy)
-    and the swap would delete them permanently.  On a METALESS root
-    still holding ``_compact_*`` dirs (a once-live index whose meta
-    sidecar was lost) the same assertion is required, but the
-    recovery there is a direct ``mode('overwrite')`` build, NOT the
-    two-rename swap — there is no complete old index to keep serving,
-    so a crash mid-recovery leaves only the partial new build."""
-    from ..plans import fsio
+    Rebuilding over a live index does NOT overwrite in place —
+    ``mode('overwrite')`` deletes the live index at write start, so a
+    crash mid-build would leave probes nothing to serve.  Instead the
+    new index is built at ``<path>.__compact_tmp__`` and installed by
+    the KG stages' swap and repair (:mod:`..plans.compaction`), with
+    the meta sidecar (written last) as the completeness marker in
+    place of ``_SUCCESS``.  The old index keeps serving probes for the
+    whole build, the next call's entry repair settles every crash
+    window, and probes mid-swap get a loud diagnosis from
+    :func:`read_ann_meta`."""
+    from ..plans import compaction, fsio
 
     spark = embeddings.sparkSession
-    if not _prerepaired:
-        _repair_ann_rebuild(spark, path)
-    live = fsio.exists(spark, _sidecar(path, "_ann_meta.parquet"))
-    if live and not _prerepaired:
-        # settle a crashed APPEND and a crashed per-bucket COMPACT so
-        # the old index serves clean probes for the whole tmp build
-        # (an index-derived rebuild must go through
-        # :func:`rebuild_ann_index`, whose preamble repairs BEFORE the
-        # caller's DataFrame captures its file listing and which then
-        # passes ``_prerepaired=True`` to skip this duplicate pass).
-        # One root LIST each when there is nothing to repair.  A
-        # compact shape the repair refuses to untangle raises by
-        # default — write_ann_index cannot verify that `embeddings`
-        # is external, and for the hand-rolled index-derived misuse
-        # the docstrings warn against (its parquet discovery skips
-        # the _-prefixed dirs holding the bucket's only copy) the
-        # swap below would make the loss permanent.  ``recover=True``
-        # is the caller's assertion that the input IS external, and
-        # downgrades the refusal to leave-in-place: the swap replaces
-        # the whole live root, refused dirs included, so the full
-        # retrain stays the documented wholesale recovery.
-        _reconcile_ann_append_intent(spark, path)
-        if recover:
-            _repair_ann_compaction(spark, path, on_unrepairable="keep")
-        else:
-            try:
-                _repair_ann_compaction(spark, path)
-            except RuntimeError as exc:
-                raise RuntimeError(
-                    "live index at %r holds a crashed-compact shape "
-                    "the entry repair refuses to untangle (chained "
-                    "below).  If `embeddings` is an EXTERNAL source "
-                    "— it does not read the live index — re-run with "
-                    "recover=True: the rebuild swap replaces the "
-                    "whole index root, refused shapes included.  If "
-                    "it derives from reading the index, do NOT: its "
-                    "file listing is missing the refused bucket's "
-                    "rows, and the swap would delete their only "
-                    "copies — see the chained refusal's diagnosis "
-                    "(the three-way shape includes its manual "
-                    "recovery order; the not-a-protocol-shape "
-                    "refusals need the stray dirs inspected and "
-                    "salvaged by hand)" % path
-                ) from exc
-    elif not live and not recover:
-        # metaless root: nothing servable to protect UNLESS it still
-        # holds _compact_* dirs — those only exist on crashed
-        # maintenance of a once-live index (the meta sidecar was
-        # lost, not never written), an old-without-live dir may hold
-        # a bucket's only copies, and the direct mode('overwrite')
-        # build below deletes them without the swap the live gate
-        # protects.  Same recover=True assertion required, checked
-        # HERE — one dir LIST, before any Spark job (first()/k-means)
-        # runs on a doomed build's behalf
-        leftovers = sorted(
-            n for n, _sz in (fsio.listdir_if_exists(spark, path) or [])
-            if n.startswith(_ANN_TMP) or n.startswith(_ANN_OLD)
-        )
-        if leftovers:
-            raise RuntimeError(
-                "metaless index root %r still holds crashed-"
-                "compact dirs %s — the meta sidecar of a live "
-                "index was lost, and an old-without-live dir may "
-                "hold a bucket's only copies, which this build's "
-                "overwrite would delete.  Re-run with "
-                "recover=True if `embeddings` is a complete "
-                "external source; otherwise salvage the _compact_"
-                "* dirs first" % (path, leftovers)
+    old = path + compaction.SUF_OLD
+    meta_path = _sidecar(path, _ANN_META)
+    if (
+        fsio.exists(spark, old)
+        and fsio.exists(spark, path)
+        and not fsio.exists(spark, meta_path)
+    ):
+        # NOT the post-swap crash shape: the swap only ever installs a
+        # complete (meta-bearing) build, so a metaless live dir beside
+        # an old copy means the live meta was LOST after the swap —
+        # external damage.  The shared repair would finish the swap
+        # and delete what may be the only complete copy; restoring the
+        # old copy would silently serve the PRE-rebuild index.  Refuse
+        # with both intact.
+        raise RuntimeError(
+            "ann index at %r lost its %s sidecar while a %s copy "
+            "exists — not a crash shape the swap can produce (it only "
+            "installs complete, meta-bearing builds), so refusing to "
+            "delete either copy.  %s"
+            % (
+                path, _ANN_META, compaction.SUF_OLD,
+                "The old copy still carries its meta: restore the "
+                "PRE-rebuild index by deleting the metaless live dir "
+                "and renaming the old copy to the live name, or "
+                "delete the old copy and rebuild from source."
+                if fsio.exists(spark, _sidecar(old, _ANN_META)) else
+                "The old copy lacks its meta too — neither is "
+                "complete; salvage by hand.",
             )
+        )
+    repaired = compaction._repair(spark, path, marker=_ANN_META)
+    if repaired in ("rolled_forward", "finished_swap"):
+        # the index has no manifest record to re-commit, so the old
+        # copy goes as soon as the repair has settled the live dir
+        fsio.delete(spark, old)
+    live = fsio.exists(spark, meta_path)
     first = embeddings.select(vec_col).first()
     if first is None:
         raise ValueError("cannot build an ANN index over an empty table")
@@ -657,630 +525,24 @@ def write_ann_index(
         state = _planes(n_planes, dim)
         meta = {"kind": "lsh", "n_planes": n_planes, "dim": dim}
     elif kind == "ivf":
-        if centroids is None:
-            centroids = train_centroids(
-                embeddings, n_centroids, id_col=id_col, vec_col=vec_col
-            )
-        state = np.asarray(centroids, dtype=np.float32)
+        state = train_centroids(
+            embeddings, n_centroids, id_col=id_col, vec_col=vec_col
+        )
         meta = {"kind": "ivf", "n_centroids": int(state.shape[0]),
                 "dim": dim}
     else:
         raise ValueError("kind must be 'lsh' or 'ivf'")
     if not live:
-        # first build (or a metaless root already vetted by the
-        # entry gate above): write directly — NOTE this path is a
-        # plain mode('overwrite'), not the two-rename swap, so with
-        # recover=True on a damaged metaless root a crash mid-build
-        # leaves only the partial new build (there was no complete
-        # old index to keep serving anyway)
+        # first build (or an incomplete one): nothing servable to
+        # protect, write directly
         _build_index_at(spark, embeddings, path, kind, state, meta,
                         id_col, vec_col)
         return meta
-    tmp = path + _ANN_REBUILD_TMP
-    old = path + _ANN_REBUILD_OLD
-    _build_index_at(spark, embeddings, tmp, kind, state, meta,
-                    id_col, vec_col)
-    fsio.rename(spark, path, old)
-    fsio.rename(spark, tmp, path)
+    _build_index_at(spark, embeddings, path + compaction.SUF_TMP, kind,
+                    state, meta, id_col, vec_col)
+    compaction._swap(spark, path)
     fsio.delete(spark, old)
     return meta
-
-
-def rebuild_ann_index(
-    spark: SparkSession,
-    path: str,
-    kind: str | None = None,
-    n_planes: int | None = None,
-    n_centroids: int | None = None,
-    centroids: np.ndarray | None = None,
-) -> dict:
-    """Retrain a live index FROM ITS OWN stored vectors — the
-    skew-trigger's natural shape (:func:`ann_index_cell_skew` crossed
-    the threshold; re-bucket with a fresh or bigger quantizer).
-
-    Hand-rolling ``write_ann_index(spark.read.parquet(path), path)``
-    is unsafe for one subtle reason: Spark captures the file listing
-    when the CALLER constructs the DataFrame, BEFORE
-    :func:`write_ann_index`'s entry repairs settle pending
-    maintenance state — a crashed append's strays then fail the
-    build scan loudly mid-swap (FILE_NOT_EXIST after the repair
-    deletes them), and a bucket mid-compact-swap is silently MISSING
-    from the stale listing (its restored live dir was never listed),
-    so the rebuilt index drops the whole bucket.  This helper settles
-    every window FIRST and only then reads, so the rebuild input is
-    exactly the committed index.
-
-    Defaults (``kind``/``n_planes``/``n_centroids`` = None) re-use
-    the live meta's values — a same-shape rebalance; override to grow
-    the quantizer.  ``centroids`` passes a frozen pre-trained IVF
-    quantizer through (else one is retrained on the current vectors —
-    the drift policy's retrain step)."""
-    _repair_ann_rebuild(spark, path)
-    meta = read_ann_meta(spark, path)
-    _reconcile_ann_append_intent(spark, path)
-    _repair_ann_compaction(spark, path)
-    kind_src = (
-        "explicit kind= argument" if kind else "stored meta"
-    )
-    kind = kind or meta["kind"]
-    # cross-check quantizer params against the RESOLVED kind before
-    # anything runs: silently dropping a mismatched one (n_centroids=
-    # on what resolves to an LSH rebuild — the caller who meant to
-    # migrate to IVF but forgot kind='ivf') would hand back a
-    # same-shape rebuild with no warning and leave their skew problem
-    # in place
-    if kind == "lsh" and (
-        n_centroids is not None or centroids is not None
-    ):
-        raise ValueError(
-            "rebuild of %r resolves to kind='lsh' (from %s) but "
-            "got IVF parameter(s) %s — pass kind='ivf' to migrate the "
-            "index, or drop them" % (
-                path, kind_src,
-                ", ".join(
-                    p for p, v in (
-                        ("n_centroids", n_centroids),
-                        ("centroids", centroids),
-                    ) if v is not None
-                ),
-            )
-        )
-    if kind == "ivf" and n_planes is not None:
-        raise ValueError(
-            "rebuild of %r resolves to kind='ivf' (from %s) but "
-            "got LSH parameter n_planes — pass kind='lsh' to migrate "
-            "the index, or drop it" % (path, kind_src)
-        )
-    kw: dict = {"kind": kind, "id_col": "vec_id", "vec_col": "vec"}
-    if kind == "lsh":
-        kw["n_planes"] = (
-            n_planes if n_planes is not None
-            else meta.get("n_planes", 8)
-        )
-    else:
-        kw["n_centroids"] = (
-            n_centroids if n_centroids is not None
-            else meta.get("n_centroids", 16)
-        )
-        kw["centroids"] = centroids
-    # listing captured HERE — strictly after the repairs above; the
-    # scan itself executes inside write_ann_index's tmp build, before
-    # the two swap renames touch the live dir.  _prerepaired: this
-    # preamble already ran the full repair set, so write_ann_index
-    # skips its duplicate pass (two root LISTs + existence RPCs per
-    # scheduled rebuild on an object store) — safe under the
-    # serialized-maintenance contract: nothing between here and the
-    # swap mutates the index root
-    stored = spark.read.parquet(path).select("vec_id", "vec")
-    return write_ann_index(stored, path, _prerepaired=True, **kw)
-
-
-def append_to_ann_index(
-    new_embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing_ids: bool = False,
-) -> dict:
-    """Append new vectors to an existing :func:`write_ann_index`
-    index WITHOUT rebuilding: bucketize only the new rows under the
-    index's FROZEN state (LSH planes re-derived from stored
-    n_planes+dim; IVF centroids read from the stored sidecar —
-    appends never move centroids) and ``mode('append')`` them into
-    the existing bucket partition directories (pure file adds — no
-    overwrite, so ``partitionOverwriteMode`` is irrelevant and
-    concurrent probes keep reading a consistent index).
-
-    IVF centroid-drift policy: the quantizer stays frozen across
-    appends, so cells only ever gain members; if the appended
-    distribution drifts, some cells grow hot and probe cost rises —
-    recall is unaffected (probes and data use the same frozen
-    centroids).  Rebuild trigger: monitor
-    :func:`ann_index_cell_skew`; when max/mean cell size exceeds the
-    deployment threshold (≈8 is a reasonable default), retrain with
-    :func:`rebuild_ann_index` (optionally seeding ``centroids=`` from
-    the old quantizer's cells) — NOT with a hand-rolled
-    ``write_ann_index(spark.read.parquet(path), path)``, whose file
-    listing is captured before the entry repairs run (see
-    :func:`rebuild_ann_index`).  Returns the (unchanged) meta dict.
-
-    Crash safety: the multi-bucket append is NOT atomic — a driver
-    kill during the job commit can leave a visible SUBSET of the
-    batch's part files (some buckets gained files, others did not),
-    and "the write either committed or it didn't" would be false.
-    Every append therefore writes a tiny write-ahead intent sidecar
-    first (``_ann_append_intent.json``: the touched buckets' pre-
-    write part-file listings), cleared only after the write lands;
-    the next maintenance entry (append / compact / rebuild)
-    reconciles a pending intent by deleting exactly the stray files,
-    restoring the pre-append state so the caller's retry is clean —
-    neither duplicated nor silently half-applied.  A retry after a
-    FULLY landed write still duplicates (the intent was cleared);
-    pass ``skip_existing_ids=True`` to anti-join the new batch
-    against the index's current ids first — exact, but costs a full
-    id-column scan of the index, so it is opt-in rather than the
-    default at 100 TB.  Probes never refuse on a pending intent (a
-    partial batch adds uncommitted extras, it never loses committed
-    vectors), matching the KG side's read-vs-repair split."""
-    from ..plans import fsio
-
-    spark = new_embeddings.sparkSession
-    # settle a crashed whole-index rebuild first (live dir may be one
-    # rename away), then read the meta the repair may have restored
-    _repair_ann_rebuild(spark, path)
-    meta = read_ann_meta(spark, path)
-    # settle a prior crashed APPEND (delete its stray part files so
-    # this run starts from disk == committed), then any crashed-
-    # compact leftovers: appending into a bucket whose live dir is
-    # mid-swap (tmp+old present, live absent) would recreate the live
-    # dir with only the new batch — the one shape
-    # _repair_ann_compaction refuses to untangle.  One dir listing
-    # each when there is nothing to repair.
-    _reconcile_ann_append_intent(spark, path)
-    # keep the repair's post-repair root name set: it stays current
-    # until our own intent write (maintenance entries are serialized
-    # by contract and nothing below mutates the root), so the
-    # pre-write bucket listings reuse it instead of paying a second
-    # root LIST per scheduled append
-    _, root_names = _repair_ann_compaction(spark, path)
-    # fail-fast dim check on the first non-null vector; ragged or
-    # null vectors deeper in the batch are caught executor-side by
-    # _bucketized's per-batch dimension guard with the same message
-    first = (
-        new_embeddings.where(F.col(vec_col).isNotNull())
-        .select(vec_col)
-        .first()
-    )
-    if first is None:
-        return meta  # empty append: nothing to write
-    dim = len(first[vec_col])
-    if dim != meta["dim"]:
-        raise ValueError(
-            "append dimension %d != index dimension %d at %s"
-            % (dim, meta["dim"], path)
-        )
-    if skip_existing_ids:
-        existing = spark.read.parquet(path).select(
-            F.col("vec_id").alias(id_col)
-        )
-        new_embeddings = new_embeddings.join(
-            existing, id_col, "left_anti"
-        )
-    if meta["kind"] == "lsh":
-        state = _planes(meta["n_planes"], meta["dim"])
-    else:
-        state = _read_centroids(spark, path)
-    bucketized = _bucketized(
-        new_embeddings, meta["kind"], state, id_col, vec_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # the intent needs the TOUCHED buckets' pre-write listings;
-        # persisting the bucketized delta means the bucket-set agg
-        # and the write share one bucketize pass over the batch
-        touched = sorted(
-            r["bucket"]
-            for r in bucketized.select("bucket").distinct().collect()
-        )
-        if not touched:
-            return meta  # all rows filtered (skip_existing_ids)
-        root = root_names  # post-repair listing, see entry preamble
-        pre: dict = {}
-        for b in touched:
-            dname = "bucket=%d" % b
-            if dname in root:
-                pre[dname] = sorted(
-                    n
-                    for n in fsio.listdir_names(
-                        spark, _sidecar(path, dname)
-                    )
-                    if n.endswith(".parquet")
-                )
-            else:
-                pre[dname] = []
-        # no-clobber atomic write: a concurrent append (maintenance
-        # contract violation) fails HERE, loudly, before any data
-        # write — not after interleaving part files
-        fsio.write_text_atomic(
-            spark, _sidecar(path, _ANN_INTENT),
-            json.dumps({"utc_ns": time.time_ns(), "pre": pre}),
-        )
-        bucketized.write.mode("append").partitionBy("bucket").parquet(
-            path
-        )
-        fsio.delete(spark, _sidecar(path, _ANN_INTENT), recursive=False)
-    finally:
-        bucketized.unpersist()
-    return meta
-
-
-_ANN_INTENT = "_ann_append_intent.json"
-
-
-def _reconcile_ann_append_intent(spark: SparkSession, path: str) -> dict:
-    """Settle a crashed :func:`append_to_ann_index`: a pending intent
-    sidecar means a prior append died between its intent write and
-    its clear — the batch may be HALF-visible (some buckets gained
-    part files, others did not; Spark's job commit is not atomic
-    across partition dirs).  Reverting to the intent's pre-write
-    listings restores exactly the committed state, so the upstream
-    retry that is coming anyway (the caller never saw success)
-    re-appends the whole batch once — exactly-once from the caller's
-    perspective, with no index-wide id scan.  Returns
-    ``{bucket_dir: n_strays_deleted}``."""
-    from ..plans import fsio
-
-    ipath = _sidecar(path, _ANN_INTENT)
-    if not fsio.exists(spark, ipath):
-        return {}
-    it = json.loads(fsio.read_text(spark, ipath))
-    reverted: dict = {}
-    for dname in sorted(it.get("pre", {})):
-        pre_set = set(it["pre"][dname])
-        bdir = _sidecar(path, dname)
-        listing = fsio.listdir_if_exists(spark, bdir)
-        if listing is None:
-            continue
-        n_strays = 0
-        remaining = 0
-        for n, _ in listing:
-            if not n.endswith(".parquet"):
-                continue
-            if n in pre_set:
-                remaining += 1
-            else:
-                fsio.delete(spark, fsio.join(bdir, n), recursive=False)
-                n_strays += 1
-        if not pre_set and not remaining:
-            # the crashed append CREATED this bucket dir — drop it so
-            # partition discovery never sees an empty phantom bucket
-            fsio.delete(spark, bdir)
-        if n_strays:
-            reverted[dname] = n_strays
-    # job-temp leftovers of the crashed write
-    fsio.delete(spark, _sidecar(path, "_temporary"))
-    fsio.delete(spark, ipath, recursive=False)
-    return reverted
-
-
-def ann_index_cell_skew(spark: SparkSession, path: str) -> float:
-    """max/mean bucket size of a persistent index — the rebuild
-    trigger of the append policy (one Spark agg over the partition
-    column; with partition-column-only scans this reads footers, not
-    vectors).  Read-only like the probes, so it shares their
-    torn-swap guard: partition discovery over a mid-swap index would
-    silently skip the absent live bucket — if that was the hot
-    bucket, the reported skew DROPS and the rebuild trigger is
-    suppressed, the same silent-miss shape the probe guard exists
-    for.  And like the probes it goes through :func:`read_ann_meta`
-    first, so a rebuild crashed between its two swap renames is
-    diagnosed loudly ("run maintenance to settle") instead of
-    surfacing as a bare missing-path error — the skew monitor is
-    exactly the reader that runs right after rebuilds."""
-    read_ann_meta(spark, path)
-    _check_no_torn_swap(spark, path)
-    row = (
-        spark.read.parquet(path)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("avg"),
-        )
-        .first()
-    )
-    return float(row["mx"]) / float(row["avg"])
-
-
-# -- ANN index small-file compaction ---------------------------------------
-# Every append_to_ann_index adds part files to the touched bucket
-# partition dirs (mode('append') never rewrites), so a week of
-# appended batches turns each hot bucket into dozens of tiny files —
-# per-file open/footer cost on every probe and listing pressure on
-# the object store, the same pathology plans/compaction.py fixes for
-# the KG stages.  The swap protocol and repair below are the SIBLING
-# of plans/compaction.py's (see its module docstring): per-bucket
-# markers and fingerprint verification here vs per-stage suffix dirs
-# and manifest rows_out there — a fix to either state machine almost
-# certainly applies to the other; mirror it.  compact_ann_index rewrites fragmented BUCKET dirs
-# (never the whole index): each is coalesced shuffle-free into
-# ceil(bytes/target) files, footer-verified row-exact, then swapped
-# by two renames.  The tmp/old dirs live as underscore-prefixed
-# SIBLINGS inside the index root ("_compact_tmp_b<N>") — Spark's
-# partition discovery ignores _-prefixed names, so a crashed compact
-# never corrupts probes: whenever the live "bucket=N" dir exists it
-# is either the old file set or the complete verified new one, and
-# the one crash window where it does NOT exist (between the two
-# renames) is detected by the probe's torn-swap guard
-# (_check_no_torn_swap), which fails loudly instead of silently
-# serving results missing that bucket.  The same brief absence also
-# exists for a concurrent probe while a compact is RUNNING; run
-# compaction in the same maintenance window as appends, as with
-# compact_kg.
-
-_ANN_TMP = "_compact_tmp_b"
-_ANN_OLD = "_compact_old_b"
-
-
-def _repair_ann_compaction(
-    spark: SparkSession, path: str, on_unrepairable: str = "raise"
-) -> Tuple[List[str], Set[str]]:
-    """Finish or roll back a crashed compact (called on every
-    compact entry).  Windows, per bucket, in protocol order:
-
-    * tmp present, live present, old ABSENT → crashed before the swap
-      began: the live dir is untouched; drop the tmp.
-    * tmp present, live ABSENT, old present → crashed between the two
-      renames: the tmp was row-verified before rename #1, so roll
-      FORWARD (rename tmp→live, drop old).
-    * tmp absent, live present, old present → crashed before the old
-      delete: finish it (drop old).
-
-    tmp, live, AND old all present is NOT a crash shape the protocol
-    can produce — it means something recreated the live dir after a
-    between-renames crash (an append run outside the maintenance
-    window; :func:`append_to_ann_index` itself repairs on entry
-    precisely so its own scheduled runs can never manufacture this),
-    and that live dir may hold rows the tmp/old copies lack — so it
-    raises with all three dirs intact rather than deleting any of
-    them.  Likewise live and old both absent (the bucket never
-    existed mid-protocol) raises rather than guessing.  Returns
-    ``(repaired bucket names, post-repair root name set)``.
-
-    Costs exactly ONE directory listing: live/old existence is
-    answered from the listing itself and the set is maintained
-    through the repairs (valid because maintenance entries — compact
-    and append — are serialized by contract; nothing else creates or
-    removes these dirs mid-repair), so on an object store a clean
-    entry pays one LIST, not one LIST plus per-dir existence RPCs.
-    The returned name set is current under the same serialized-
-    maintenance contract, so callers (compact_ann_index) reuse it
-    instead of paying a second root LIST per maintenance entry.
-
-    ``on_unrepairable='keep'`` turns both refusals into leave-in-place
-    skips (the unrepairable bucket's dirs are not touched and not
-    listed as repaired) — ONLY for callers about to replace the whole
-    index tree from an EXTERNAL source (:func:`write_ann_index`'s
-    live-rebuild swap deletes the old root, refused shapes included),
-    where raising would block the wholesale recovery that makes the
-    refusal moot.  Every entry whose input or probes READ the live
-    buckets must keep the default ``'raise'``."""
-    from ..plans import fsio
-
-    names = set(fsio.listdir_names(spark, path))
-    repaired: List[str] = []
-    kept: Set[str] = set()  # buckets left in place under 'keep'
-    for n in sorted(names):
-        if n.startswith(_ANN_TMP):
-            b = n[len(_ANN_TMP):]
-            live_name = "bucket=" + b
-            old_name = _ANN_OLD + b
-            live = _sidecar(path, live_name)
-            old = _sidecar(path, old_name)
-            live_exists = live_name in names
-            old_exists = old_name in names
-            if live_exists and old_exists:
-                if on_unrepairable == "keep":
-                    # the old dir below must survive too — deleting
-                    # it would manufacture the pre-swap tmp+live
-                    # shape and a later entry would drop the tmp
-                    kept.add(b)
-                    continue
-                raise RuntimeError(
-                    "ann compact repair: %r has tmp, live AND old "
-                    "dirs for bucket %s — a between-renames crash "
-                    "followed by something recreating the live dir "
-                    "(an append outside the maintenance window?); "
-                    "the live dir may hold rows the tmp/old copies "
-                    "lack, so refusing to delete any of the three — "
-                    "recover IN THIS ORDER: merge 'bucket=%s' into "
-                    "'%s%s', remove the now-merged 'bucket=%s', "
-                    "rename the tmp to the live name, THEN remove "
-                    "'%s%s' last.  Every intermediate state of that "
-                    "order is one this repair refuses (all three "
-                    "present) or completes forward (tmp+old -> roll "
-                    "forward; live+old -> drop old); removing the "
-                    "old dir any earlier creates the tmp+live-only "
-                    "shape this repair reads as a pre-swap crash and "
-                    "would delete the merged tmp"
-                    % (path, b, b, _ANN_TMP, b, b, _ANN_OLD, b)
-                )
-            if live_exists:
-                fsio.delete(spark, _sidecar(path, n))
-                names.discard(n)
-            elif old_exists:
-                fsio.rename(spark, _sidecar(path, n), live)
-                fsio.delete(spark, old)
-                names.discard(n)
-                names.add(live_name)
-                names.discard(old_name)
-            else:
-                if on_unrepairable == "keep":
-                    continue
-                raise RuntimeError(
-                    "ann compact repair: %r has a tmp dir but neither "
-                    "a live nor an old 'bucket=%s' — not a crash shape "
-                    "the swap protocol can produce; refusing to guess"
-                    % (path, b)
-                )
-            repaired.append("bucket=" + b)
-    # old-only leftovers (post-swap crash): the live dir is already
-    # the new file set; just drop the old copy.  `names` was kept
-    # current through the loop above, so no re-listing is needed.
-    for n in sorted(names):
-        if n.startswith(_ANN_OLD):
-            b = n[len(_ANN_OLD):]
-            if b in kept:
-                continue  # part of a shape left intact above
-            if ("bucket=" + b) not in names:
-                if on_unrepairable == "keep":
-                    continue
-                raise RuntimeError(
-                    "ann compact repair: %r has an old dir for bucket "
-                    "%s but no live dir — not a crash shape the swap "
-                    "protocol can produce; refusing to guess" % (path, b)
-                )
-            fsio.delete(spark, _sidecar(path, n))
-            names.discard(n)
-            if "bucket=" + b not in repaired:
-                repaired.append("bucket=" + b)
-    return repaired, names
-
-
-def _check_no_torn_swap(spark: SparkSession, path: str) -> None:
-    """Probe-side guard for the one crash window a READER can see:
-    between compact's two renames the live ``bucket=N`` dir is absent
-    while its tmp/old copy exists — partition discovery then silently
-    serves results MISSING that entire bucket (no error) until the
-    next maintenance entry repairs it.  Probes are read-only by
-    design — a probe that repaired could race a live in-flight
-    compact and delete the tmp it had just verified — so they detect
-    the torn shape and fail LOUDLY instead, and any maintenance entry
-    (:func:`compact_ann_index` / :func:`append_to_ann_index`) rolls
-    the swap forward.  tmp or old dirs WITH the live dir present are
-    fine: the live file set is intact (pre-swap or post-old-delete
-    crash leftovers), so the probe's answer is correct.  Costs one
-    directory listing per probe call — a batch top-k over a whole
-    query set, not a per-row path."""
-    from ..plans import fsio
-
-    names = set(fsio.listdir_names(spark, path))
-    for prefix in (_ANN_TMP, _ANN_OLD):
-        for n in names:
-            if n.startswith(prefix) and (
-                "bucket=" + n[len(prefix):]
-            ) not in names:
-                raise RuntimeError(
-                    "ann index at %r: torn compaction swap — %r exists "
-                    "but 'bucket=%s' is absent, so a probe would "
-                    "silently return results missing that whole "
-                    "bucket; run compact_ann_index or "
-                    "append_to_ann_index (their entry repair rolls "
-                    "the swap forward) before probing"
-                    % (path, n, n[len(prefix):])
-                )
-
-
-def compact_ann_index(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    force: bool = False,
-) -> dict:
-    """Rewrite fragmented bucket partitions of a
-    :func:`write_ann_index` index into ~``target_bytes`` files.
-
-    Idempotent and cheap when nothing is fragmented: the no-op
-    decision per bucket is ONE dir listing (file count + bytes vs
-    ``ceil(bytes/target)``), never footer reads — a scheduled compact
-    over an already-compact index costs one listing per bucket.  A
-    bucket that IS rewritten is footer-verified row-exact against its
-    pre-rewrite footer total before the swap; a mismatched rewrite is
-    discarded with the live dir untouched.  Sidecars
-    (``_ann_meta.parquet``, ``_ann_centroids.parquet``) are one-row /
-    tiny, never appended to, and never touched here.
-
-    Do not run concurrently with :func:`append_to_ann_index` over the
-    same path (same maintenance-window contract as
-    ``plans.compaction.compact_kg``).  All I/O routes through
-    :mod:`..plans.fsio`, so the index may live on any Hadoop-visible
-    filesystem.  Returns ``{buckets_total, buckets_compacted,
-    n_files_before, n_files_after, rows_verified, repaired}``."""
-    from ..plans import fsio
-    from ..plans.manifest import table_fingerprint
-
-    # fail fast BEFORE repair mutates anything: 0 would divide by zero
-    # mid-maintenance, a negative value would silently coalesce every
-    # bucket to one file (same guard jobs/kg_build.py applies in front
-    # of compact_kg — this API has no CLI, so it guards itself)
-    if target_bytes <= 0:
-        raise ValueError(
-            "compact_ann_index: target_bytes must be positive, got %r"
-            % (target_bytes,)
-        )
-    # settle crashed sibling maintenance first: a crashed whole-index
-    # rebuild (live dir one rename away), then a crashed append's
-    # stray part files — compacting strays would launder an
-    # uncommitted half-batch into the compacted file set
-    _repair_ann_rebuild(spark, path)
-    _reconcile_ann_append_intent(spark, path)
-    # the repair's post-repair name set is current under the
-    # serialized-maintenance contract — reusing it saves the second
-    # root LIST every scheduled compact would otherwise pay
-    repaired, root_names = _repair_ann_compaction(spark, path)
-    buckets = sorted(n for n in root_names if n.startswith("bucket="))
-    if not buckets:
-        raise ValueError(
-            "compact_ann_index: no bucket partitions at %r — not a "
-            "write_ann_index directory" % path
-        )
-    out = {
-        "buckets_total": len(buckets),
-        "buckets_compacted": 0,
-        "n_files_before": 0,
-        "n_files_after": 0,
-        "rows_verified": 0,
-        "repaired": repaired,
-    }
-    for b in buckets:
-        live = _sidecar(path, b)
-        pq_files = [
-            (n, sz)
-            for n, sz in fsio.listdir(spark, live)
-            if n.endswith(".parquet")
-        ]
-        n_files = len(pq_files)
-        nbytes = sum(sz for _, sz in pq_files)
-        n_target = max(1, math.ceil(nbytes / float(target_bytes)))
-        out["n_files_before"] += n_files
-        if n_files <= n_target and not force:
-            out["n_files_after"] += n_files
-            continue
-        fp = table_fingerprint(live, spark=spark)
-        bucket_id = b[len("bucket="):]
-        tmp = _sidecar(path, _ANN_TMP + bucket_id)
-        old = _sidecar(path, _ANN_OLD + bucket_id)
-        # reading the bucket dir directly yields the file columns only
-        # (vec_id, vec — the partition value lives in the dir name),
-        # which is exactly what the original part files hold, so the
-        # rewrite is layout-identical; coalesce is shuffle-free
-        spark.read.parquet(live).coalesce(n_target).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        tmp_fp = table_fingerprint(tmp, spark=spark)
-        if tmp_fp["rows"] != fp["rows"]:
-            fsio.delete(spark, tmp)
-            raise RuntimeError(
-                "compact_ann_index: rewrite of %r produced %d rows, "
-                "expected %d — tmp discarded, bucket untouched"
-                % (live, tmp_fp["rows"], fp["rows"])
-            )
-        fsio.rename(spark, live, old)
-        fsio.rename(spark, tmp, live)
-        fsio.delete(spark, old)
-        out["buckets_compacted"] += 1
-        out["n_files_after"] += tmp_fp["n_files"]
-        out["rows_verified"] += tmp_fp["rows"]
-    return out
 
 
 def ann_index_topk(
@@ -1299,14 +561,8 @@ def ann_index_topk(
 
     All sidecar reads go through Spark (:func:`read_ann_meta`), so
     the probe works against an index on any Hadoop-visible filesystem
-    — no driver-local ``open()`` of ``path``.
-
-    Raises RuntimeError if the index has a torn compaction swap (a
-    live bucket dir absent with its tmp/old copy present) — the one
-    crash shape that would otherwise SILENTLY drop a whole bucket
-    from the results; see :func:`_check_no_torn_swap`."""
+    — no driver-local ``open()`` of ``path``."""
     meta = read_ann_meta(spark, path)
-    _check_no_torn_swap(spark, path)
     q_ids = np.array([q[0] for q in queries], dtype=np.int64)
     q_mat = _normalize_rows(
         np.array([q[1] for q in queries], dtype=np.float32)

@@ -442,6 +442,12 @@ def train_crf_distributed(
 
     import numpy as np
 
+    if rounds < 1:
+        # zero rounds fits nothing: the caller would get the untrained
+        # model back, even over an empty corpus
+        raise ValueError(
+            "train_crf_distributed: rounds must be >= 1, got %r" % (rounds,)
+        )
     if prepared is not None:
         if sample is not None:
             raise ValueError(
@@ -754,6 +760,10 @@ def train_crf_mixed_local(
 
     from ..kernel.crf import token_features
 
+    if rounds < 1:
+        raise ValueError(
+            "train_crf_mixed_local: rounds must be >= 1, got %r" % (rounds,)
+        )
     rows = sorted(rows)
     if sample is not None:
         rows = rows[:sample]

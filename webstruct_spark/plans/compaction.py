@@ -58,15 +58,11 @@ the per-conversation stages downstream of ``extracted`` are 5-10%
 of corpus bytes, so at 100 TB the big rewrite is the ``extracted``
 stage's alone and runs at full cluster width.
 
-SIBLING PROTOCOL: the persistent ANN index has its own copy of this
-write→verify→two-rename→delete-old swap and its per-window repair
-(:func:`webstruct_spark.operators.similarity.compact_ann_index` /
-``_repair_ann_compaction``), differing where the layouts differ —
-per-BUCKET dirs with underscore-prefixed sibling markers (so Spark's
-partition discovery skips them) and fingerprint verification instead
-of manifest ``rows_out`` (the index has no manifest).  A fix to
-either state machine (a new crash window, object-store rename
-semantics) almost certainly applies to the other — mirror it.
+The persistent ANN index uses this same swap (:func:`_swap`) and
+repair (:func:`_repair`) when ``operators.similarity.write_ann_index``
+rebuilds over a live index.  Its completeness marker is the
+``_ann_meta.parquet`` sidecar, which the index build writes last, in
+place of ``_SUCCESS``.
 """
 from __future__ import annotations
 
@@ -106,8 +102,20 @@ def _delta_provenance(rec: dict) -> dict:
     }
 
 
-def _repair(spark, path: str) -> str:
-    """Repair a crashed swap for ``path``.  Returns one of
+def _swap(spark, path: str) -> None:
+    """Protocol steps 3-4: move ``path`` aside to its ``SUF_OLD``
+    marker, then install the complete ``SUF_TMP`` dir in its place.
+    The old dir is left for the caller to drop once any record of the
+    swap is committed; a crash between or after the renames is settled
+    by :func:`_repair`."""
+    fsio.rename(spark, path, path + SUF_OLD)
+    fsio.rename(spark, path + SUF_TMP, path)
+
+
+def _repair(spark, path: str, marker: str = "_SUCCESS") -> str:
+    """Repair a crashed swap for ``path``; ``marker`` is the file the
+    tmp dir's writer puts down last, so its presence means the tmp is
+    complete.  Returns one of
     ``"clean"`` (nothing to do), ``"dropped_tmp"`` (pre-swap orphan
     removed), ``"rolled_forward"`` (stage is now the compacted data;
     caller must re-commit lineage), ``"finished_swap"`` (swap had
@@ -126,7 +134,7 @@ def _repair(spark, path: str) -> str:
             # "clean" and never refresh the stale file lineage).
             fsio.delete(spark, tmp)
             return "finished_swap"
-        if fsio.exists(spark, fsio.join(tmp, "_SUCCESS")):
+        if fsio.exists(spark, fsio.join(tmp, marker)):
             # crashed between 3 and 4: tmp was fully written AND
             # row-verified before any rename — roll forward.  Same
             # rule: the old dir outlives the caller's re-commit.
@@ -211,7 +219,6 @@ def _compact_dir(
             "rewrite" % (path, fp["rows"], expected_rows)
         )
     tmp = path + SUF_TMP
-    old = path + SUF_OLD
     spark.read.parquet(path).coalesce(n_target).write.mode(
         "overwrite"
     ).parquet(tmp)
@@ -223,8 +230,7 @@ def _compact_dir(
             "tmp discarded, stage untouched"
             % (path, tmp_fp["rows"], fp["rows"])
         )
-    fsio.rename(spark, path, old)
-    fsio.rename(spark, tmp, path)
+    _swap(spark, path)
     # the old dir is NOT deleted here: the caller deletes it AFTER
     # the manifest re-commit (protocol step 6 after step 5), so a
     # crash in between is detectable by _repair as "finished_swap"

@@ -767,9 +767,8 @@ def append_kg(
     stage_concurrency: int = 4,
 ) -> Dict[str, str]:
     """Append NEW conversations to an existing KG build — the
-    incremental path for a corpus that grows after the initial build
-    (counterpart of similarity.append_to_ann_index for the flagship
-    pipeline).  Output is row-identical to a fresh :func:`build_kg`
+    incremental path for a corpus that grows after the initial build.
+    Output is row-identical to a fresh :func:`build_kg`
     over the union corpus (pytest-gated), because:
 
     * extracted/mentions/group_entities/groups/triples are strictly
